@@ -25,7 +25,7 @@ import yaml
 
 from http_datafusion_spark.errors import ConfigError, IoError
 
-_ALLOWED_METHODS = {"GET", "POST"}
+ALLOWED_METHODS = {"GET", "POST"}
 
 
 @dataclass
@@ -37,14 +37,11 @@ class Pagination:
     page_size_param: str = "limit"
     page_size_default: int = 10
 
-    @classmethod
-    def from_dict(cls, raw: dict[str, Any]) -> Pagination:
-        known = {f.name for f in fields(cls)}
-        unknown = set(raw) - known
-        if unknown:
-            raise ConfigError(f"unknown pagination keys: {sorted(unknown)}")
-        kwargs = {k: v for k, v in raw.items() if v is not None}
-        return cls(**kwargs)
+    @property
+    def size(self) -> int:
+        """The page size every request carries: ``page_size``, or
+        ``page_size_default`` when that is 0."""
+        return self.page_size or self.page_size_default
 
 
 @dataclass
@@ -72,15 +69,6 @@ class CursorPagination:
     page_size_param: str = "limit"
     max_pages: int = 1000
 
-    @classmethod
-    def from_dict(cls, raw: dict[str, Any]) -> CursorPagination:
-        known = {f.name for f in fields(cls)}
-        unknown = set(raw) - known
-        if unknown:
-            raise ConfigError(f"unknown cursor_pagination keys: {sorted(unknown)}")
-        kwargs = {k: v for k, v in raw.items() if v is not None}
-        return cls(**kwargs)
-
 
 @dataclass
 class LinkPagination:
@@ -93,14 +81,18 @@ class LinkPagination:
 
     max_pages: int = 10_000
 
-    @classmethod
-    def from_dict(cls, raw: dict[str, Any]) -> LinkPagination:
-        known = {f.name for f in fields(cls)}
-        unknown = set(raw) - known
-        if unknown:
-            raise ConfigError(f"unknown link_pagination keys: {sorted(unknown)}")
-        kwargs = {k: v for k, v in raw.items() if v is not None}
-        return cls(**kwargs)
+
+def _mode_from_dict(raw: dict[str, Any], key: str, cls: type) -> Any:
+    """Build the pagination-mode dataclass ``cls`` from the source's
+    ``key`` mapping, or None when the source has none: unknown keys are
+    an error, and a ``null`` value keeps the default."""
+    mode = raw.get(key)
+    if mode is None:
+        return None
+    unknown = set(mode) - {f.name for f in fields(cls)}
+    if unknown:
+        raise ConfigError(f"unknown {key} keys: {sorted(unknown)}")
+    return cls(**{k: v for k, v in mode.items() if v is not None})
 
 
 def _expand_env(value: str, where: str) -> str:
@@ -155,10 +147,10 @@ class Source:
             )
         self.method = (self.method or "GET").upper()
         # Reference allows only GET/POST (src/datasources.rs:217-223).
-        if self.method not in _ALLOWED_METHODS:
+        if self.method not in ALLOWED_METHODS:
             raise ConfigError(
                 f"source {self.name!r}: method {self.method!r} not supported "
-                f"(allowed: {sorted(_ALLOWED_METHODS)})"
+                f"(allowed: {sorted(ALLOWED_METHODS)})"
             )
         if self.headers is not None:
             if not isinstance(self.headers, dict) or not all(
@@ -180,20 +172,13 @@ class Source:
         unknown = set(raw) - known
         if unknown:
             raise ConfigError(f"source has unknown keys: {sorted(unknown)}")
-        pag = raw.get("pagination")
-        cpag = raw.get("cursor_pagination")
-        lpag = raw.get("link_pagination")
         return cls(
             name=raw.get("name", ""),
             url=raw.get("url", ""),
             method=raw.get("method") or "GET",
-            pagination=Pagination.from_dict(pag) if pag is not None else None,
-            cursor_pagination=(
-                CursorPagination.from_dict(cpag) if cpag is not None else None
-            ),
-            link_pagination=(
-                LinkPagination.from_dict(lpag) if lpag is not None else None
-            ),
+            pagination=_mode_from_dict(raw, "pagination", Pagination),
+            cursor_pagination=_mode_from_dict(raw, "cursor_pagination", CursorPagination),
+            link_pagination=_mode_from_dict(raw, "link_pagination", LinkPagination),
             sql=raw.get("sql"),
             headers=raw.get("headers"),
             body=raw.get("body"),

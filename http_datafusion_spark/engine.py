@@ -13,6 +13,7 @@ Differences, on purpose:
 
 from __future__ import annotations
 
+import json
 import re
 from dataclasses import dataclass
 
@@ -67,30 +68,17 @@ def run_source(
         # Scale-out path: known page range => page-per-partition parallel
         # fetch on executors (sources/datasource.py) instead of
         # driver-side staging.
-        from http_datafusion_spark.sources.datasource import register
+        from http_datafusion_spark.sources.datasource import page_options, register
 
         register(spark)
-        reader = (
-            spark.read.format("httpjson")
-            .option("url", source.url)
-            .option("method", source.method)
-            .option("startPage", pag.start_page)
-            .option("endPage", pag.end_page)
-            .option("pageSize", pag.page_size)
-            .option("pageParam", pag.page_param)
-            .option("pageSizeParam", pag.page_size_param)
-        )
+        opts = {"url": source.url, "method": source.method, **page_options(pag)}
         if max_rows is not None:
-            reader = reader.option("maxRows", max_rows)
+            opts["maxRows"] = max_rows
         if source.headers:
-            import json as _json
-
-            reader = reader.option("headersJson", _json.dumps(source.headers))
+            opts["headersJson"] = json.dumps(source.headers)
         if source.body is not None:
-            import json as _json
-
-            reader = reader.option("bodyJson", _json.dumps(source.body))
-        table = reader.load()
+            opts["bodyJson"] = json.dumps(source.body)
+        table = spark.read.format("httpjson").options(**opts).load()
         table.createOrReplaceTempView(source.name)
     else:
         table = register_http_table(

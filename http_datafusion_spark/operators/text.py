@@ -72,14 +72,16 @@ def spread_docs(df: DataFrame, key: str = "doc_id") -> DataFrame:
     repartition on ``key`` spreads it; the explicit width (the
     session's shuffle-partition conf) stops AQE coalescing the small
     text exchange straight back to one partition. When the scan is
-    already at least core-wide (the many-file 100 TB layout), this is a
-    NO-OP — no exchange is added, so it is never a cluster-scale
-    pessimization. Pass only the columns the map work needs before
-    calling (the exchange carries every column given to it)."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
+    already at least core-wide (the many-file 100 TB layout), or at
+    least as wide as the shuffle-partition conf, this is a NO-OP — no
+    exchange is added and the plan never gets narrower, so it is never a
+    cluster-scale pessimization. Pass only the columns the map work
+    needs before calling (the exchange carries every column given to
+    it)."""
+    width = df.rdd.getNumPartitions()
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if width >= min(df.sparkSession.sparkContext.defaultParallelism, n_part):
+        return df
     return df.repartition(n_part, key)
 
 

@@ -11,8 +11,11 @@ src/datasources.rs:192-198). This source instead registers as a real
   executors, nothing is staged on the driver;
 - falls back to a single sequential partition for open-ended
   pagination (termination on ``null``/``[]`` is inherently sequential);
-- infers its schema from the first page at plan time (or accepts a
-  user schema via ``.schema(...)`` — the zero-RPC path);
+- infers its schema from every row of the first page at plan time (or
+  accepts a user schema via ``.schema(...)`` — the zero-RPC path);
+- turns each page body into rows with ``http_json.body_rows``, the rule
+  the driver staging uses too, so both paths give one table for one
+  body;
 - maps filters on DECLARED columns (``filterParams`` option) to HTTP
   query params so the fetch itself shrinks: equality is fully pushed,
   ranges are pushed as superset hints and re-checked by Catalyst, and
@@ -49,6 +52,7 @@ from pyspark.sql.types import StructType
 
 from http_datafusion_spark.config import Pagination
 from http_datafusion_spark.errors import HttpError
+from http_datafusion_spark.sources import http_json
 
 
 class HttpJsonDataSource(DataSource):
@@ -57,25 +61,14 @@ class HttpJsonDataSource(DataSource):
         return "httpjson"
 
     def schema(self):  # noqa: D102 — inferred when the user gives none
-        from http_datafusion_spark.sources.http_json import fetch_json
-
         opts = _norm_options(self.options)
-        url = opts.get("url")
-        if not url:
+        probe = opts.get("url")
+        if not probe:
             raise HttpError("httpjson source requires the 'url' option")
-        pag = _pagination_from_options(opts)
-        method = opts.get("method", "GET")
         if opts.get("startpage") is not None:
-            from http_datafusion_spark.sources.http_json import build_page_url
-
-            probe = build_page_url(url, pag, int(opts["startpage"]))
-        else:
-            probe = url
-        body = fetch_json(
-            probe, method, headers=_headers_from_options(opts), json_body=_body_from_options(opts)
-        )
-        rows = body if isinstance(body, list) else ([body] if body is not None else [])
-        return _infer_schema_from_rows(rows)
+            pag = _pagination_from_options(opts)
+            probe = http_json.build_page_url(probe, pag, pag.start_page)
+        return _infer_schema_from_rows(_page_rows(opts, probe))
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return HttpJsonReader(schema, dict(self.options))
@@ -90,15 +83,45 @@ def _norm_options(options: dict) -> dict:
     return {k.lower(): v for k, v in options.items()}
 
 
+# Option name (as Spark stores it, lower-cased) -> Pagination field and
+# its parser: the one mapping between the two spellings.
+_PAGE_OPTIONS = {
+    "startpage": ("start_page", int),
+    "endpage": ("end_page", int),
+    "pagesize": ("page_size", int),
+    "pageparam": ("page_param", str),
+    "pagesizeparam": ("page_size_param", str),
+}
+
+
 def _pagination_from_options(options: dict) -> Pagination:
+    """Options -> Pagination; an absent option keeps Pagination's default,
+    except ``endPage``, whose absence means open-ended."""
     o = _norm_options(options)
-    return Pagination(
-        start_page=int(o.get("startpage", 1)),
-        end_page=int(o["endpage"]) if o.get("endpage") is not None else None,
-        page_size=int(o.get("pagesize", 10)),
-        page_param=o.get("pageparam", "page"),
-        page_size_param=o.get("pagesizeparam", "limit"),
+    given = {f: parse(o[k]) for k, (f, parse) in _PAGE_OPTIONS.items() if o.get(k) is not None}
+    return Pagination(**{"end_page": None, **given})
+
+
+def page_options(pag: Pagination) -> dict:
+    """Pagination -> the reader options that rebuild it, the page size
+    being the one its requests carry (``Pagination.size``)."""
+    return {k: getattr(pag, f) for k, (f, _) in _PAGE_OPTIONS.items()} | {"pagesize": pag.size}
+
+
+def _max_rows(opts: dict) -> int | None:
+    return int(opts["maxrows"]) if opts.get("maxrows") is not None else None
+
+
+def _page_rows(opts: dict, url: str) -> list[dict]:
+    """Fetch one page with the source's method, headers and body, and
+    turn it into rows by the shared body->rows rule."""
+    body = http_json.fetch_json(
+        url,
+        opts.get("method", "GET"),
+        headers=_headers_from_options(opts),
+        json_body=_body_from_options(opts),
     )
+    return http_json.body_rows(body)
 
 
 def _headers_from_options(options: dict) -> dict[str, str] | None:
@@ -113,15 +136,16 @@ def _body_from_options(options: dict):
     return json.loads(raw) if raw else None
 
 
-def _infer_schema_from_rows(rows: Sequence) -> StructType:
-    """Plan-time schema inference without a SparkSession: build a tiny
-    Arrow table from the staged rows and map its schema to Spark types."""
+def _infer_schema_from_rows(rows: Sequence[dict]) -> StructType:
+    """Plan-time schema inference without a SparkSession: Arrow types
+    each column over every row, so a field only a later row carries
+    still becomes a column (columns in first-seen order), mapped to
+    Spark types."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    if not rows:
-        return StructType([])
-    arrow = pa.Table.from_pylist([r if isinstance(r, dict) else {"value": r} for r in rows])
+    names = dict.fromkeys(k for r in rows for k in r)
+    arrow = pa.Table.from_pydict({k: [r.get(k) for r in rows] for k in names})
     return from_arrow_schema(arrow.schema)
 
 
@@ -198,55 +222,32 @@ class HttpJsonReader(DataSourceReader):
 
     def partitions(self) -> Sequence[InputPartition]:
         opts = self.options
-        max_rows = int(opts["maxrows"]) if opts.get("maxrows") is not None else None
-        if opts.get("startpage") is not None and opts.get("endpage") is not None:
-            start, end = int(opts["startpage"]), int(opts["endpage"])
-            if max_rows is not None:
-                # Limit pushdown (SURVEY §4.2): fetch only the pages that
-                # can contribute to the first max_rows rows.
-                size = _pagination_from_options(opts).page_size or 10
-                need = -(-max_rows // size)  # ceil
-                end = min(end, start + need - 1)
-            return [_PagePartition(p) for p in range(start, end + 1)]
-        return [_PagePartition(None)]
+        pag = _pagination_from_options(opts)
+        if opts.get("startpage") is None or pag.end_page is None:
+            return [_PagePartition(None)]
+        end = pag.end_page
+        max_rows = _max_rows(opts)
+        if max_rows is not None:
+            # Limit pushdown (SURVEY §4.2): fetch only the pages that
+            # can contribute to the first max_rows rows.
+            end = min(end, pag.start_page + -(-max_rows // pag.size) - 1)
+        return [_PagePartition(p) for p in range(pag.start_page, end + 1)]
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
-        # Runs on an executor: import inside so the worker re-resolves.
-        from http_datafusion_spark.sources.http_json import (
-            build_page_url,
-            fetch_json,
-            fetch_rows,
-        )
-
         opts = self.options
         url = self._base_url()
-        method = opts.get("method", "GET")
         pag = _pagination_from_options(opts)
-        hdrs = _headers_from_options(opts)
-        jbody = _body_from_options(opts)
-        if partition.page is None:
-            start = opts.get("startpage")
-            max_rows = int(opts["maxrows"]) if opts.get("maxrows") is not None else None
-            rows = fetch_rows(
-                url, method, start, pag if start is not None else None,
-                max_rows=max_rows, headers=hdrs, json_body=jbody,
-            )
+        if partition.page is not None:
+            rows = _page_rows(opts, http_json.build_page_url(url, pag, partition.page))
         else:
-            body = fetch_json(
-                build_page_url(url, pag, partition.page), method, headers=hdrs, json_body=jbody
+            start = opts.get("startpage")
+            rows = http_json.fetch_rows(
+                url, opts.get("method", "GET"), start, pag if start is not None else None,
+                max_rows=_max_rows(opts),
+                headers=_headers_from_options(opts),
+                json_body=_body_from_options(opts),
             )
-            if body is None:
-                rows = []
-            elif isinstance(body, list):
-                rows = body
-            else:
-                rows = [body]
-
-        convs = _row_converters(self.schema)
-        for r in rows:
-            if not isinstance(r, dict):
-                r = {"value": r}
-            yield tuple(conv(r.get(name)) for name, conv in convs)
+        return iter(_to_tuples(self.schema, rows))
 
 
 class HttpJsonStreamReader(SimpleDataSourceStreamReader):
@@ -279,34 +280,20 @@ class HttpJsonStreamReader(SimpleDataSourceStreamReader):
         self.options = _norm_options(options)
 
     def initialOffset(self) -> dict:  # noqa: N802
-        return {"page": int(self.options.get("startpage", 1))}
+        return {"page": _pagination_from_options(self.options).start_page}
 
-    def _fetch_page(self, page: int) -> list:
-        from http_datafusion_spark.sources.http_json import build_page_url, fetch_json
-
+    def _fetch_page(self, page: int) -> list[dict]:
         opts = self.options
-        body = fetch_json(
-            build_page_url(opts["url"], _pagination_from_options(opts), page),
-            opts.get("method", "GET"),
-            headers=_headers_from_options(opts),
-            json_body=_body_from_options(opts),
+        return _page_rows(
+            opts, http_json.build_page_url(opts["url"], _pagination_from_options(opts), page)
         )
-        if body is None:
-            return []
-        return body if isinstance(body, list) else [body]
 
-    def _tuples(self, rows: list) -> Iterator[tuple]:
+    def _tuples(self, rows: list[dict]) -> Iterator[tuple]:
         # A LIST iterator, not a generator: Spark's simple-stream wrapper
         # calls next() on the result AND copy.copy()s it for replay —
         # generators aren't copyable, bare lists aren't iterators, but
         # CPython list iterators are both (picklable via __reduce__).
-        convs = _row_converters(self.schema)
-        out = []
-        for r in rows:
-            if not isinstance(r, dict):
-                r = {"value": r}
-            out.append(tuple(conv(r.get(name)) for name, conv in convs))
-        return iter(out)
+        return iter(_to_tuples(self.schema, rows))
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         max_pages = int(self.options.get("maxpagespertrigger", 10))
@@ -328,13 +315,9 @@ class HttpJsonStreamReader(SimpleDataSourceStreamReader):
         return self._tuples(rows)
 
 
-def _coerce(v):
-    """JSON value -> something Spark's row converter accepts; nested
-    objects pass through as dicts (StructType) / lists (ArrayType)."""
-    if isinstance(v, dict):
-        return {k: _coerce(x) for k, x in v.items()}
-    if isinstance(v, list):
-        return [_coerce(x) for x in v]
+def _same(v):
+    """Parsed JSON values Spark's row converter takes as they are:
+    nested objects as dicts (StructType), arrays as lists (ArrayType)."""
     return v
 
 
@@ -362,8 +345,8 @@ def _coercer_for(dt):
     """Schema-aware converter for one field type, built once per read.
 
     Recurses into struct/array types so a nested fractional float in an
-    integer-typed nested field is caught too; all other types take the
-    generic passthrough."""
+    integer-typed nested field is caught too; all other types pass
+    through."""
     from pyspark.sql.types import ArrayType, ByteType, IntegerType, LongType, ShortType, StructType
 
     if isinstance(dt, (LongType, IntegerType, ShortType, ByteType)):
@@ -374,7 +357,7 @@ def _coercer_for(dt):
         def conv_struct(v, subs=subs):
             if not isinstance(v, dict):
                 return v
-            return {k: (subs[k](x) if k in subs else _coerce(x)) for k, x in v.items()}
+            return {k: (subs[k](x) if k in subs else x) for k, x in v.items()}
 
         return conv_struct
     if isinstance(dt, ArrayType):
@@ -386,11 +369,13 @@ def _coercer_for(dt):
             return [elem(x) for x in v]
 
         return conv_array
-    return _coerce
+    return _same
 
 
-def _row_converters(schema: StructType):
-    return [(f.name, _coercer_for(f.dataType)) for f in schema.fields]
+def _to_tuples(schema: StructType, rows: list[dict]) -> list[tuple]:
+    """Rows -> Spark tuples in schema order, for the batch and stream readers."""
+    convs = [(f.name, _coercer_for(f.dataType)) for f in schema.fields]
+    return [tuple(conv(r.get(name)) for name, conv in convs) for r in rows]
 
 
 def register(spark) -> None:

@@ -5,7 +5,9 @@ Reference behavior being re-created (for parity, with the bugs fixed):
 - fetch JSON from a REST endpoint with GET/POST only; non-2xx is an
   error (reference src/datasources.rs:212-268);
 - array body -> N rows, object body -> 1 row
-  (src/datasources.rs:177-190);
+  (src/datasources.rs:177-190), a scalar -> the row ``{"value": x}``.
+  ``body_rows`` is this rule, and sources/datasource.py uses it too,
+  so one body gives one table on either ingest path;
 - optional pagination: ``?page=N`` starting at ``start_page``,
   incrementing until the endpoint is exhausted
   (src/datasources.rs:119-161). The reference stops only on JSON
@@ -23,6 +25,13 @@ Reference behavior being re-created (for parity, with the bugs fixed):
   strictly more robust, so the default is full-scan with an opt-in
   ``schema_mode="first_record"`` for bit-parity experiments.
 
+The three pagination protocols — page number (``fetch_rows``), cursor
+token (``fetch_rows_cursor``), RFC 8288 ``Link`` (``fetch_rows_link``)
+— are each a step that fetches one page and names the next; one loop,
+``_walk``, owns the stop rules they share. Registration and refresh
+stage through one helper that also releases the cache a re-registered
+name held.
+
 Scale note: this module stages rows on the driver — exactly what the
 reference does (src/datasources.rs:192-198) and appropriate for
 config-driven API ingest (bounded payloads). For large paginated APIs
@@ -34,15 +43,21 @@ on the driver.
 from __future__ import annotations
 
 import json
+import sys
+from collections.abc import Callable
 from typing import Any
 
 import requests
 from pyspark.sql import DataFrame, SparkSession
 
-from http_datafusion_spark.config import CursorPagination, LinkPagination, Pagination
+from http_datafusion_spark.config import (
+    ALLOWED_METHODS,
+    CursorPagination,
+    LinkPagination,
+    Pagination,
+)
 from http_datafusion_spark.errors import HttpError
 
-_ALLOWED_METHODS = {"GET", "POST"}
 _DEFAULT_TIMEOUT = 30.0
 _RETRY_AFTER_CAP = 30.0  # ceiling on honored Retry-After sleeps (seconds)
 
@@ -50,7 +65,6 @@ _RETRY_AFTER_CAP = 30.0  # ceiling on honored Retry-After sleeps (seconds)
 def fetch_json(
     url: str,
     method: str = "GET",
-    timeout: float = _DEFAULT_TIMEOUT,
     retries: int = 3,
     backoff: float = 0.5,
     headers: dict[str, str] | None = None,
@@ -72,14 +86,12 @@ def fetch_json(
     is how a polite ingest becomes a ban.
     """
     resp = _request_with_retries(
-        url,
-        method=method,
-        timeout=timeout,
-        retries=retries,
-        backoff=backoff,
-        headers=headers,
-        json_body=json_body,
+        url, method, retries=retries, backoff=backoff, headers=headers, json_body=json_body
     )
+    return _parse_json(resp, url)
+
+
+def _parse_json(resp: requests.Response, url: str) -> Any:
     try:
         return resp.json()
     except ValueError as e:
@@ -89,23 +101,22 @@ def fetch_json(
 def _request_with_retries(
     url: str,
     method: str = "GET",
-    timeout: float = _DEFAULT_TIMEOUT,
     retries: int = 3,
     backoff: float = 0.5,
     headers: dict[str, str] | None = None,
     json_body: Any | None = None,
     accept_304: bool = False,
-) -> "requests.Response":
-    """The shared retry/Retry-After loop behind fetch_json and
-    fetch_json_conditional: returns the Response on 2xx (or 304 when
-    ``accept_304``), retries connection errors / 429 / 5xx with
-    exponential backoff (a numeric Retry-After, capped at
-    ``_RETRY_AFTER_CAP``, overrides that attempt's delay), and raises
-    HttpError on other statuses or when retries are exhausted."""
+) -> requests.Response:
+    """The shared retry/Retry-After loop behind every request: returns
+    the Response on 2xx (or 304 when ``accept_304``), retries
+    connection errors / 429 / 5xx with exponential backoff (a numeric
+    Retry-After, capped at ``_RETRY_AFTER_CAP``, overrides that
+    attempt's delay), and raises HttpError on other statuses or when
+    retries are exhausted."""
     import time
 
     method = (method or "GET").upper()
-    if method not in _ALLOWED_METHODS:
+    if method not in ALLOWED_METHODS:
         raise HttpError(f"No Method Available: {method!r} (allowed: GET, POST)")
     last_err: Exception | None = None
     retry_after: float | None = None
@@ -115,7 +126,7 @@ def _request_with_retries(
         retry_after = None
         try:
             resp = requests.request(
-                method, url, timeout=timeout, headers=headers, json=json_body
+                method, url, timeout=_DEFAULT_TIMEOUT, headers=headers, json=json_body
             )
         except requests.RequestException as e:
             last_err = HttpError(f"request execution failed for {url!r}: {e}")
@@ -142,15 +153,49 @@ def _request_with_retries(
     raise last_err  # type: ignore[misc]
 
 
-def _extend_rows(rows: list[dict | Any], body: Any) -> None:
-    """Array body extends, object body appends one row, null adds nothing
-    (reference src/datasources.rs:177-190)."""
+def body_rows(body: Any) -> list[dict]:
+    """One JSON body -> its rows, the rule both ingest paths share: an
+    array gives one row per element, an object one row, ``null`` none
+    (reference src/datasources.rs:177-190). A scalar, as an element or
+    as the whole body, becomes the row ``{"value": x}``."""
     if body is None:
-        return
-    if isinstance(body, list):
-        rows.extend(body)
-    else:
-        rows.append(body)
+        return []
+    items = body if isinstance(body, list) else [body]
+    return [r if isinstance(r, dict) else {"value": r} for r in items]
+
+
+def _walk(
+    step: Callable[[Any], tuple[list[dict], Any]],
+    first: Any,
+    max_rows: int | None,
+    max_pages: int,
+) -> list[dict]:
+    """The one pagination loop. ``step(pos)`` fetches the page at
+    ``pos`` (a page number, cursor token or URL) and returns its rows
+    and the next position, None when the server names none.
+
+    Stops on an empty or ``null`` page (the reference loops forever on
+    ``[]``), after ``max_pages`` pages, on a position the walk has
+    already visited (a re-served token or a self link is a server bug
+    that must not burn the page cap), and once ``max_rows`` rows are
+    staged (limit pushdown, SURVEY §4.2: a LIMIT n query must not fetch
+    a 10k-page source). Rows are never trimmed — the engine applies the
+    exact LIMIT; the cap only stops further page *fetches*.
+    """
+    rows: list[dict] = []
+    pos, seen = first, {first}
+    for _ in range(max_pages):
+        if max_rows is not None and len(rows) >= max_rows:
+            break
+        page, nxt = step(pos)
+        if not page:
+            break
+        rows.extend(page)
+        if nxt is None or nxt in seen:
+            break
+        seen.add(nxt)
+        pos = nxt
+    return rows
 
 
 def build_page_url(url: str, pagination: Pagination, page: int) -> str:
@@ -163,8 +208,7 @@ def build_page_url(url: str, pagination: Pagination, page: int) -> str:
     (src/model.rs:48-59).
     """
     sep = "&" if "?" in url else "?"
-    size = pagination.page_size or pagination.page_size_default
-    return f"{url}{sep}{pagination.page_param}={page}&{pagination.page_size_param}={size}"
+    return f"{url}{sep}{pagination.page_param}={page}&{pagination.page_size_param}={pagination.size}"
 
 
 def fetch_rows(
@@ -172,49 +216,34 @@ def fetch_rows(
     method: str = "GET",
     start_page: int | str | None = None,
     pagination: Pagination | None = None,
-    timeout: float = _DEFAULT_TIMEOUT,
     max_rows: int | None = None,
     headers: dict[str, str] | None = None,
     json_body: Any | None = None,
-) -> list[Any]:
+) -> list[dict]:
     """Fetch all rows from an endpoint, paginating if requested
     (reference populate_data, src/datasources.rs:110-199).
 
-    Pagination stops on a ``null`` body (reference behavior,
-    src/datasources.rs:139-142) or an empty array (bug-fix — the
-    reference loops forever on ``[]``), or at ``pagination.end_page``
-    when configured, or once ``max_rows`` rows have been staged (limit
-    pushdown, SURVEY §4.2: a LIMIT n query must not fetch a 10k-page
-    source). Rows are never trimmed — the engine applies the exact
-    LIMIT; the cap only stops further page *fetches*.
+    Pages run from ``start_page`` (else ``pagination.start_page``) to
+    ``pagination.end_page`` when that is set; ``_walk`` applies the
+    other stop rules. A single-object page ends the walk: there is
+    nothing further to paginate.
     """
-    rows: list[Any] = []
     if start_page is None and pagination is None:
-        _extend_rows(rows, fetch_json(url, method, timeout, headers=headers, json_body=json_body))
-        return rows
+        return body_rows(fetch_json(url, method, headers=headers, json_body=json_body))
 
     pag = pagination or Pagination()
-    if start_page is not None:
-        # Non-numeric start pages parse to 0 in the reference
-        # (src/datasources.rs:159-160); here they are an error.
-        page = int(start_page)
-    else:
-        page = pag.start_page
-    while True:
-        if pag.end_page is not None and page > pag.end_page:
-            break
-        if max_rows is not None and len(rows) >= max_rows:
-            break
+    # Non-numeric start pages parse to 0 in the reference
+    # (src/datasources.rs:159-160); here they are an error.
+    first = int(start_page) if start_page is not None else pag.start_page
+
+    def step(page: int) -> tuple[list[dict], int | None]:
         body = fetch_json(
-            build_page_url(url, pag, page), method, timeout, headers=headers, json_body=json_body
+            build_page_url(url, pag, page), method, headers=headers, json_body=json_body
         )
-        if body is None or (isinstance(body, list) and not body):
-            break
-        _extend_rows(rows, body)
-        if not isinstance(body, list):
-            break  # single-object page: nothing further to paginate
-        page += 1
-    return rows
+        return body_rows(body), (page + 1 if isinstance(body, list) else None)
+
+    pages = sys.maxsize if pag.end_page is None else pag.end_page - first + 1
+    return _walk(step, first, max_rows, pages)
 
 
 def build_cursor_url(url: str, cp: CursorPagination, cursor: str | None) -> str:
@@ -238,36 +267,27 @@ def fetch_rows_cursor(
     url: str,
     method: str = "GET",
     cursor_pagination: CursorPagination | None = None,
-    timeout: float = _DEFAULT_TIMEOUT,
     max_rows: int | None = None,
     headers: dict[str, str] | None = None,
     json_body: Any | None = None,
-) -> list[Any]:
+) -> list[dict]:
     """Walk a cursor/token-paginated endpoint to exhaustion.
 
     The shape the reference's page-number model cannot express (its
     Pagination is page/limit only, src/model.rs:20-34): each response
     is an object whose ``data_field`` holds the page's rows and whose
     ``cursor_field`` holds the opaque token for the next request —
-    null / absent / "" meaning done. Also stops on an empty page, at
-    ``max_rows`` staged rows (limit pushdown, same contract as
-    fetch_rows), at ``max_pages`` (safety cap against token loops),
-    and on a token the walk has already seen (a re-served cursor is a
-    server bug that must not burn the cap before stopping).
+    null / absent / "" meaning done. ``max_pages`` caps the walk;
+    ``_walk`` applies the other stop rules.
     """
     cp = cursor_pagination or CursorPagination()
-    rows: list[Any] = []
-    cursor: str | None = None
-    seen_cursors: set[str] = set()
-    for _ in range(cp.max_pages):
-        if max_rows is not None and len(rows) >= max_rows:
-            break
+
+    def step(cursor: str | None) -> tuple[list[dict], str | None]:
         body = fetch_json(
-            build_cursor_url(url, cp, cursor), method, timeout,
-            headers=headers, json_body=json_body,
+            build_cursor_url(url, cp, cursor), method, headers=headers, json_body=json_body
         )
         if body is None:
-            break
+            return [], None
         if not isinstance(body, dict):
             raise HttpError(
                 f"cursor pagination expects an object body with "
@@ -277,30 +297,24 @@ def fetch_rows_cursor(
         if cp.data_field not in body:
             # A missing data key is a misconfiguration (wrong data_field
             # or a non-paginated endpoint), not "no more pages" — silently
-            # returning a truncated/empty table would mask it (r10 ADVICE
-            # item 2). Only an explicit empty array means done.
+            # returning a truncated/empty table would mask it. Only an
+            # explicit empty array means done.
             raise HttpError(
                 f"cursor pagination field {cp.data_field!r} absent from "
                 f"response body of {url!r} (keys: {sorted(body)})"
             )
-        page_rows = body[cp.data_field]
-        if not page_rows:
-            break
-        if not isinstance(page_rows, list):
+        page = body[cp.data_field]
+        if not page:
+            return [], None
+        if not isinstance(page, list):
             raise HttpError(
                 f"cursor pagination field {cp.data_field!r} must be an array; "
-                f"got {type(page_rows).__name__} from {url!r}"
+                f"got {type(page).__name__} from {url!r}"
             )
-        rows.extend(page_rows)
         nxt = body.get(cp.cursor_field)
-        if nxt is None or nxt == "":
-            break
-        nxt = str(nxt)
-        if nxt in seen_cursors:
-            break  # server re-served a token — stop, don't loop
-        seen_cursors.add(nxt)
-        cursor = nxt
-    return rows
+        return body_rows(page), (None if nxt is None or nxt == "" else str(nxt))
+
+    return _walk(step, None, max_rows, cp.max_pages)
 
 
 def _has_typed_scalar(v: Any) -> bool:
@@ -344,10 +358,11 @@ def json_rows_to_df(
     spark: SparkSession,
     rows: list[Any],
     schema_mode: str = "full",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Stage JSON rows as a DataFrame.
 
+    ``rows`` is read as one array body (``body_rows``), so a scalar
+    row stages as ``{"value": x}``.
     ``schema_mode="full"`` (default): Spark infers over all rows —
     strictly more robust than the reference — with untyped-empty
     containers normalized to null first (see ``_normalize_untyped``)
@@ -360,15 +375,12 @@ def json_rows_to_df(
     Empty input yields an empty 0-column DataFrame instead of the
     reference's panic (src/datasources.rs:195).
     """
+    rows = body_rows(rows)
     if not rows:
         return spark.createDataFrame([], schema="struct<>")
     if schema_mode == "full":
-        rows = [
-            {k: _normalize_untyped(v) for k, v in r.items()} if isinstance(r, dict) else r
-            for r in rows
-        ]
-    if num_partitions is None:
-        num_partitions = max(1, min(len(rows) // 5000 + 1, spark.sparkContext.defaultParallelism))
+        rows = [{k: _normalize_untyped(v) for k, v in r.items()} for r in rows]
+    num_partitions = max(1, min(len(rows) // 5000 + 1, spark.sparkContext.defaultParallelism))
     lines = [json.dumps(r, ensure_ascii=False) for r in rows]
     rdd = spark.sparkContext.parallelize(lines, num_partitions)
     if schema_mode == "first_record":
@@ -380,6 +392,25 @@ def json_rows_to_df(
     return spark.read.json(rdd)
 
 
+def _register_rows(
+    spark: SparkSession, rows: list[dict], table_name: str, schema_mode: str
+) -> DataFrame:
+    """Stage ``rows``, cache them and point the temp view ``table_name``
+    at them. The reference re-serializes and re-parses the staged JSON
+    on every query execution (src/execution.rs:173-202); the cache
+    keeps the in-memory columnar form instead. The cache of the
+    DataFrame the view pointed at before is released first:
+    ``createOrReplaceTempView`` leaves it cached, so each re-registered
+    name would otherwise hold one more copy for the session's life."""
+    if spark.catalog.tableExists(table_name):
+        spark.catalog.uncacheTable(table_name)
+    df = json_rows_to_df(spark, rows, schema_mode=schema_mode)
+    if rows:
+        df = df.cache()
+    df.createOrReplaceTempView(table_name)
+    return df
+
+
 def register_http_table(
     spark: SparkSession,
     url: str,
@@ -388,24 +419,20 @@ def register_http_table(
     start_page: int | str | None = None,
     pagination: Pagination | None = None,
     schema_mode: str = "full",
-    cache: bool = True,
     max_rows: int | None = None,
     headers: dict[str, str] | None = None,
     json_body: Any | None = None,
     cursor_pagination: CursorPagination | None = None,
     link_pagination: LinkPagination | None = None,
 ) -> DataFrame:
-    """Fetch + register a named temp view — the Spark analogue of
+    """Fetch + register a cached temp view — the Spark analogue of
     ``dataframe::url`` (reference src/dataframe.rs:7-24).
 
-    The reference re-serializes and re-parses the staged JSON on every
-    query execution (src/execution.rs:173-202); we ``cache()`` the
-    ingested DataFrame instead so repeat queries hit the in-memory
-    columnar form. ``max_rows`` stops page fetches early (limit
-    pushdown; see fetch_rows). ``cursor_pagination`` selects the
-    token-walk protocol and ``link_pagination`` the RFC 8288
-    rel="next" walk instead of page numbers (the three modes are
-    mutually exclusive, enforced by config.Source).
+    ``max_rows`` stops page fetches early (limit pushdown; see
+    ``_walk``). ``cursor_pagination`` selects the token-walk protocol
+    and ``link_pagination`` the RFC 8288 rel="next" walk instead of
+    page numbers (the three modes are mutually exclusive, enforced by
+    config.Source).
     """
     if cursor_pagination is not None:
         rows = fetch_rows_cursor(
@@ -423,11 +450,7 @@ def register_http_table(
             url, method, start_page, pagination,
             max_rows=max_rows, headers=headers, json_body=json_body,
         )
-    df = json_rows_to_df(spark, rows, schema_mode=schema_mode)
-    if cache and rows:
-        df = df.cache()
-    df.createOrReplaceTempView(table_name)
-    return df
+    return _register_rows(spark, rows, table_name, schema_mode)
 
 
 def fetch_json_conditional(
@@ -435,7 +458,6 @@ def fetch_json_conditional(
     etag: str | None = None,
     last_modified: str | None = None,
     method: str = "GET",
-    timeout: float = _DEFAULT_TIMEOUT,
     headers: dict[str, str] | None = None,
 ) -> tuple[Any, str | None, str | None, bool]:
     """Conditional fetch (RFC 9110 preconditions) — incremental-refresh
@@ -455,26 +477,20 @@ def fetch_json_conditional(
       call to an unconditional fetch).
 
     The retry/Retry-After discipline is the SAME loop fetch_json uses
-    (``_request_with_retries``, r11 ADVICE item 2) with a 304
-    short-circuit — a transient 429/503 during a periodic conditional
-    refresh backs off and retries instead of killing the refresh
-    (requests treats 304 as a non-exceptional response with an empty
-    body).
+    (``_request_with_retries``) with a 304 short-circuit — a transient
+    429/503 during a periodic conditional refresh backs off and retries
+    instead of killing the refresh (requests treats 304 as a
+    non-exceptional response with an empty body).
     """
     h = dict(headers or {})
     if etag is not None:
         h["If-None-Match"] = etag
     if last_modified is not None:
         h["If-Modified-Since"] = last_modified
-    resp = _request_with_retries(
-        url, method=method, timeout=timeout, headers=h, accept_304=True
-    )
+    resp = _request_with_retries(url, method, headers=h, accept_304=True)
     if resp.status_code == 304:
         return None, etag, last_modified, True
-    try:
-        body = resp.json()
-    except ValueError as e:
-        raise HttpError(f"failed to parse JSON from {url!r}: {e}") from e
+    body = _parse_json(resp, url)
     return body, resp.headers.get("ETag"), resp.headers.get("Last-Modified"), False
 
 
@@ -486,7 +502,6 @@ def refresh_http_table(
     last_modified: str | None = None,
     method: str = "GET",
     schema_mode: str = "full",
-    cache: bool = True,
     headers: dict[str, str] | None = None,
 ) -> tuple[str | None, str | None, bool]:
     """One periodic-refresh cycle for a conditionally-fetched table:
@@ -496,9 +511,9 @@ def refresh_http_table(
     - **304** -> the registered temp view is left completely untouched
       (no re-parse, no re-cache, no view churn) and the caller's
       validators come back unchanged;
-    - **2xx** -> the fresh body replaces the view (same normalization
-      path as register_http_table) and the NEW validators are returned
-      for the next cycle.
+    - **2xx** -> the fresh body replaces the view (the same staging
+      helper as register_http_table) and the NEW validators are
+      returned for the next cycle.
 
     Returns ``(etag, last_modified, refreshed)``. This is the
     incremental half the reference's one-shot model lacks: a
@@ -509,15 +524,9 @@ def refresh_http_table(
     body, new_etag, new_lm, not_modified = fetch_json_conditional(
         url, etag=etag, last_modified=last_modified, method=method, headers=headers
     )
-    if not_modified:
-        return new_etag, new_lm, False
-    rows: list[Any] = []
-    _extend_rows(rows, body)
-    df = json_rows_to_df(spark, rows, schema_mode=schema_mode)
-    if cache and rows:
-        df = df.cache()
-    df.createOrReplaceTempView(table_name)
-    return new_etag, new_lm, True
+    if not not_modified:
+        _register_rows(spark, body_rows(body), table_name, schema_mode)
+    return new_etag, new_lm, not not_modified
 
 
 def _state_split(s: str, delim: str, *, angle: bool) -> list[str]:
@@ -603,12 +612,11 @@ def parse_link_next(link_header: str | None) -> str | None:
 def fetch_rows_link(
     url: str,
     method: str = "GET",
-    timeout: float = _DEFAULT_TIMEOUT,
     max_rows: int | None = None,
     max_pages: int = 10_000,
     headers: dict[str, str] | None = None,
     json_body: Any | None = None,
-) -> list[Any]:
+) -> list[dict]:
     """Walk a ``Link: <...>; rel="next"`` paginated endpoint to
     exhaustion — the third pagination contract beside page-number
     (fetch_rows) and cursor/token (fetch_rows_cursor), and the one the
@@ -616,38 +624,16 @@ def fetch_rows_link(
     express at all: the server names the next URL, the client follows
     it verbatim.
 
-    Stops when the response carries no ``rel="next"`` link, on an empty
-    array body, at ``max_rows`` staged rows (limit pushdown, same
-    contract as fetch_rows), at ``max_pages`` (safety cap), or on a
-    next-URL the walk has already visited (a self/looping link is a
-    server bug that must not burn the cap before stopping). Relative
-    next-URLs resolve against the current page's URL (RFC 3986 join).
-    Transient failures ride the shared retry/Retry-After loop.
+    The walk ends when a response carries no ``rel="next"`` link;
+    ``_walk`` applies the other stop rules, ``max_pages`` among them.
+    Relative next-URLs resolve against the current page's URL (RFC 3986
+    join).
     """
     from urllib.parse import urljoin
 
-    rows: list[Any] = []
-    current = url
-    seen: set[str] = {url}
-    for _ in range(max_pages):
-        if max_rows is not None and len(rows) >= max_rows:
-            break
-        resp = _request_with_retries(
-            current, method=method, timeout=timeout, headers=headers, json_body=json_body
-        )
-        try:
-            body = resp.json()
-        except ValueError as e:
-            raise HttpError(f"failed to parse JSON from {current!r}: {e}") from e
-        if body is None or (isinstance(body, list) and not body):
-            break
-        _extend_rows(rows, body)
+    def step(page_url: str) -> tuple[list[dict], str | None]:
+        resp = _request_with_retries(page_url, method, headers=headers, json_body=json_body)
         nxt = parse_link_next(resp.headers.get("Link"))
-        if nxt is None:
-            break
-        nxt = urljoin(current, nxt)
-        if nxt in seen:
-            break  # looping Link chain — stop, don't spin to the cap
-        seen.add(nxt)
-        current = nxt
-    return rows
+        return body_rows(_parse_json(resp, page_url)), (None if nxt is None else urljoin(page_url, nxt))
+
+    return _walk(step, url, max_rows, max_pages)

@@ -404,3 +404,56 @@ def test_explicit_double_schema_is_the_widening_path(spark, widen_url):
     )
     got = {r.wid: r.amt for r in df.collect()}
     assert got == {1: 10.0, 2: 30.5, 3: None}
+
+
+# ------------------------------------------- one body, one table on both paths
+
+BODIES = {
+    "/ints": [1, 2, 3],
+    "/strings": ["a", "b"],
+    "/late_field": [{"a": 1}, {"a": 2, "b": "x"}],
+}
+
+
+class _BodyHandler(BaseHTTPRequestHandler):
+    def log_message(self, *args):
+        pass
+
+    def do_GET(self):  # noqa: N802
+        body = json.dumps(BODIES[urlparse(self.path).path]).encode()
+        self.send_response(200)
+        self.send_header("Content-Type", "application/json")
+        self.end_headers()
+        self.wfile.write(body)
+
+
+@pytest.fixture(scope="module")
+def body_base(spark):
+    from http_datafusion_spark.sources.datasource import register
+
+    register(spark)
+    srv = HTTPServer(("127.0.0.1", 0), _BodyHandler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield f"http://127.0.0.1:{srv.server_port}"
+    srv.shutdown()
+
+
+@pytest.mark.parametrize("path", ["/ints", "/strings"])
+def test_scalar_array_body_same_table_on_both_paths(spark, body_base, path):
+    """A body of scalars stages as a ``value`` column on the driver path
+    and on the datasource path alike (not as ``_corrupt_record``)."""
+    from http_datafusion_spark.sources.http_json import register_http_table
+
+    driver = register_http_table(spark, body_base + path, table_name="scalars_driver")
+    executor = spark.read.format("httpjson").option("url", body_base + path).load()
+    assert driver.schema.simpleString() == executor.schema.simpleString()
+    assert driver.columns == ["value"]
+    assert sorted(driver.collect()) == sorted(executor.collect())
+    assert sorted(r.value for r in executor.collect()) == BODIES[path]
+
+
+def test_schema_inference_reads_every_row_of_the_probe_page(spark, body_base):
+    """A field that row 1 of page 1 lacks still becomes a column."""
+    df = spark.read.format("httpjson").option("url", body_base + "/late_field").load()
+    assert df.schema.simpleString() == "struct<a:bigint,b:string>"
+    assert sorted(df.collect()) == [(1, None), (2, "x")]

@@ -538,6 +538,36 @@ def test_refresh_http_table_cycle(spark, base_url):
     assert [r.v for r in spark.table("cond_tbl").orderBy("id").collect()] == [2, 2, 2]
 
 
+def _cached_blocks(spark) -> int:
+    return sum(i.numCachedPartitions() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def test_reregistering_a_name_releases_its_cache(spark, base_url):
+    """Re-registering a table name must release the cache of the
+    DataFrame the view pointed at (createOrReplaceTempView alone keeps
+    it cached for the session's life), and a 304 refresh must leave the
+    view and its cache untouched."""
+    from http_datafusion_spark.sources.http_json import (
+        refresh_http_table,
+        register_http_table,
+    )
+
+    url = f"{base_url}/etag_resource"
+    held = []
+    for _ in range(3):
+        register_http_table(spark, url, table_name="rereg_tbl")
+        assert spark.table("rereg_tbl").count() == 3  # materializes the cache
+        held.append(_cached_blocks(spark))
+    etag, lm, refreshed = refresh_http_table(spark, url, "rereg_tbl")
+    assert refreshed and spark.table("rereg_tbl").count() == 3
+    held.append(_cached_blocks(spark))
+    assert held == [held[0]] * 4, f"cached blocks grew across re-registrations: {held}"
+
+    _, _, refreshed = refresh_http_table(spark, url, "rereg_tbl", etag=etag, last_modified=lm)
+    assert not refreshed and spark.catalog.isCached("rereg_tbl")
+    assert _cached_blocks(spark) == held[0]
+
+
 def test_conditional_fetch_method_gate_and_errors(base_url):
     from http_datafusion_spark.errors import HttpError
     from http_datafusion_spark.sources.http_json import fetch_json_conditional

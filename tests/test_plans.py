@@ -6,6 +6,8 @@ partial (map-side) aggregation.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1467,19 +1469,45 @@ def test_collect_inventory_is_pinned():
     }, f"collect() inventory drifted — audit the new/removed site: {sites}"
 
 
-def test_spread_docs_is_scale_adaptive(spark, sf_dir):
+@contextlib.contextmanager
+def _spread_widths(spark, monkeypatch, parallelism: int, shuffle_partitions: int):
+    """Fix the two widths spread_docs reads — the cluster's parallelism
+    and the shuffle-partition conf — whatever the session's core count."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda self: parallelism))
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        monkeypatch.undo()
+
+
+def test_spread_docs_is_scale_adaptive(spark, sf_dir, monkeypatch):
     """spread_docs must repartition ONLY when the scan is narrower than
     the cluster's parallelism (the single-file bench-SF case) and be a
     strict no-op on already-wide inputs — the property that makes the
-    r18 tokenize-spread adoptions safe at the many-file 100 TB layout
+    tokenize-spread adoptions safe at the many-file 100 TB layout
     (guide §2.5: fix input skew without pessimizing parallel scans)."""
     from http_datafusion_spark.operators.text import spread_docs
 
     d = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "text")
-    narrow = d.coalesce(1)
-    spread = spread_docs(narrow)
-    assert spread.rdd.getNumPartitions() == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    wide = d.repartition(spark.sparkContext.defaultParallelism * 2, "doc_id")
-    assert spread_docs(wide) is wide, "no-op expected on core-wide inputs"
+    with _spread_widths(spark, monkeypatch, parallelism=8, shuffle_partitions=8):
+        assert spread_docs(d.coalesce(1)).rdd.getNumPartitions() == 8
+        wide = d.repartition(16, "doc_id")
+        assert spread_docs(wide) is wide, "no-op expected on core-wide inputs"
+
+
+def test_spread_docs_never_narrows(spark, sf_dir, monkeypatch):
+    """A scan narrower than the cluster but wider than the
+    shuffle-partition conf (say 2000 cores, 200 shuffle partitions and a
+    400-file scan) must keep its width: repartitioning it to the conf
+    would narrow the plan and add an exchange."""
+    from http_datafusion_spark.operators.text import spread_docs
+
+    d = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "text")
+    with _spread_widths(spark, monkeypatch, parallelism=8, shuffle_partitions=2):
+        mid = d.repartition(4, "doc_id")
+        assert spread_docs(mid).rdd.getNumPartitions() >= 4
