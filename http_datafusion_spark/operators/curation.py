@@ -37,6 +37,7 @@ from http_datafusion_spark.operators.text import (
     spread_docs,
     token_count,
     whitespace_tokens,
+    word_ngrams,
 )
 from http_datafusion_spark.functions.pinning import pin
 from http_datafusion_spark.plans.registry import query
@@ -779,23 +780,10 @@ PMI_TOPK = 15
     tags=("text", "bench_extra",),
 )
 def ngram_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # One text exchange feeds BOTH token streams (r18 partitioned_docs:
-    # the bigram window needed the doc_id exchange anyway; carrying raw
-    # text across it and exploding after runs tokenize at full width).
-    # Measured sf5 13.12 -> 2.68 s; sf0.1 1.05 -> 1.65 s (32-task floor
-    # cost at the smallest SF — the sax-motifs fixed-cost-vs-linear-win
-    # trade).
+    # One text exchange feeds both token streams.
     dp = partitioned_docs(d)
-    dw = dp.select("doc_id", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1"))
-    wdoc = W.partitionBy("doc_id").orderBy("pos")
-    bi = (
-        dw.withColumn("w2", F.lead("w1", 1).over(wdoc))
-        .filter(F.col("w2").isNotNull())
-        .select("w1", "w2")
-    )
+    bi = word_ngrams(dp, 2).select("w1", "w2")
     uni = dp.select(F.explode(whitespace_tokens(F.col("text"))).alias("word"))
     # Two passes total (was 5 — r16 derive-don't-rescan triage): the
     # unigram/bigram COUNT TABLES are pinned, and the corpus totals
@@ -1590,20 +1578,10 @@ BIGRAM_ADD_K = 0.5
     tags=("text",),
 )
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # r18 partitioned_docs: one raw-text exchange feeds the bigram
-    # window AND the unigram stream; tokenize runs at full width.
-    # Measured sf5 12.14 -> 4.83 s; sf0.1 1.18 -> 1.51 s (floor cost).
+    # One text exchange feeds the bigram window and the unigram stream.
     dp = partitioned_docs(d)
-    dw = dp.select("doc_id", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1"))
-    wdoc = W.partitionBy("doc_id").orderBy("pos")
-    bi = (
-        dw.withColumn("w2", F.lead("w1", 1).over(wdoc))
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", "w1", "w2")
-    )
+    bi = word_ngrams(dp, 2).select("doc_id", "w1", "w2")
     uni = dp.select(F.explode(whitespace_tokens(F.col("text"))).alias("word"))
     uc = uni.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     vsize = uc.count()
@@ -4464,21 +4442,12 @@ def customer_order_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "pipeline"),
 )
 def text_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # r18 partitioned_docs: text crosses the window's exchange raw;
-    # tokenize runs post-exchange at full width. Measured sf5
-    # 6.89 -> 3.35 s; sf0.1 0.98 -> 1.62 s (floor cost).
-    dw = partitioned_docs(d, "source").select(
-        "doc_id", "source", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1")
-    )
-    wdoc = W.partitionBy("doc_id").orderBy("pos")
-    bi = (
-        dw.withColumn("w2", F.lead("w1", 1).over(wdoc))
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", "source", "w1", "w2")
-    )
+    # One text exchange feeds the bigram window and the unigram
+    # stream (its 1-grams: every token, the same posexplode).
+    dp = partitioned_docs(d, "source")
+    dw = word_ngrams(dp, 1)
+    bi = word_ngrams(dp, 2).select("doc_id", "source", "w1", "w2")
     train_bi = (
         bi.filter(F.col("doc_id") % 2 == 0)
         .groupBy("w1", "w2")
@@ -4767,22 +4736,10 @@ KN_DISCOUNT = 0.75  # Chen & Goodman 1998's fixed absolute discount
     tags=("text",),
 )
 def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # r18 partitioned_docs: one raw-text exchange feeds the bigram
-    # window AND the unigram stream; tokenize runs at full width.
-    # Measured sf5 9.83 -> 5.00 s; sf0.1 1.13 -> 2.21 s (floor cost).
+    # One text exchange feeds the bigram window and the unigram stream.
     dp = partitioned_docs(d, "source")
-    dw = dp.select(
-        "doc_id", "source", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1")
-    )
-    wdoc = W.partitionBy("doc_id").orderBy("pos")
-    bi = (
-        dw.withColumn("w2", F.lead("w1", 1).over(wdoc))
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", "source", "w1", "w2")
-    )
+    bi = word_ngrams(dp, 2).select("doc_id", "source", "w1", "w2")
     uni = dp.select(F.explode(whitespace_tokens(F.col("text"))).alias("word"))
     uc = uni.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("cu"))
     # bc feeds four consumers (fw, pcn, t, the score join) as an
@@ -5648,15 +5605,8 @@ def _fh_bucket_sql(k: int) -> str:
 )
 def feature_hash_collision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    wdoc = Window.partitionBy("doc_id").orderBy("pos")
-    # r18 partitioned_docs: text crosses the window's exchange raw;
-    # tokenize runs post-exchange at full width (sf5 7.01 -> 1.69 s).
-    toks = (
-        partitioned_docs(d)
-        .select("doc_id", F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w"))
-        .withColumn("w1", F.lead("w", 1).over(wdoc))
-        .filter(F.col("w1").isNotNull())
-        .select(F.concat_ws(" ", F.lower("w"), F.lower("w1")).alias("tok"))
+    toks = word_ngrams(partitioned_docs(d), 2).select(
+        F.concat_ws(" ", F.lower("w1"), F.lower("w2")).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     hashed = vocab.select(

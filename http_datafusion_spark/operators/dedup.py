@@ -40,6 +40,7 @@ from http_datafusion_spark.functions.hashing import (
     minhash_perm_sql,
 )
 from http_datafusion_spark.functions.pinning import pin
+from http_datafusion_spark.operators.text import partitioned_docs, whitespace_tokens, word_ngrams
 from http_datafusion_spark.plans.registry import query
 from http_datafusion_spark.plans.tables import load_tables
 
@@ -58,56 +59,22 @@ _SHINGLES_SQL = (
 )
 
 
-def _words(col: Column) -> Column:
-    return F.filter(F.split(F.trim(col), r"\s+"), lambda w: w != "")
-
-
 def shingles_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle) exploded from any (doc_id, text, ...) frame,
-    duplicates retained — the df-generic core of :func:`shingle_stream`
-    (also probed per micro-batch by streaming/queries.py's incremental
-    dedup, where the input is a stream batch, not a loaded table).
-
-    Implemented as posexplode + window lead instead of a per-row
-    higher-order ``transform`` lambda: HOFs evaluate interpreted
-    (outside whole-stage codegen) and measured ~15x slower here
-    (8.2 s vs 0.54 s at sf0.1). The window shuffle partitions by
-    doc_id, which also spreads the work across executors regardless of
-    how few input files there are — and leaves the stream
-    hash-partitioned on doc_id, so a following groupBy(doc_id) adds NO
+    """(doc_id, shingle) word-:data:`SHINGLE_WIDTH`-grams of any
+    (doc_id, text, ...) frame, duplicates retained — the df-generic core
+    of :func:`shingle_stream` (also probed per micro-batch by
+    streaming/queries.py's incremental dedup, where the input is a
+    stream batch, not a loaded table). The stream stays
+    hash-partitioned on doc_id, so a following groupBy(doc_id) adds no
     exchange.
-
-    The doc_id repartition happens BEFORE the explode (r18, guide
-    §2.3/§8 "shuffle the payload once, small rows decide"): the window
-    needs hashpartitioning(doc_id) either way, so the exchange count is
-    unchanged, but exploding first made the ONE exchange carry the
-    exploded token stream (sf5: 154 MB, vs 35 MB of raw text) AND ran
-    the whole tokenize+explode inside the scan task — a single task
-    when the input is one parquet file (6.6 s serial of a 16 s sf5
-    wall, task-histogram-measured). Repartitioning the (doc_id, text)
-    rows first moves tokenize+explode AFTER the exchange, where it runs
-    at full shuffle-partition parallelism regardless of input file
-    count.
     """
-    from pyspark.sql import Window as W
+    grams = word_ngrams(partitioned_docs(docs), SHINGLE_WIDTH)
+    return grams.select("doc_id", _gram(SHINGLE_WIDTH).alias("shingle"))
 
-    w = W.partitionBy("doc_id").orderBy("pos")
-    # Explicit partition count (the session's shuffle-partition conf, so
-    # it scales with the deployment, not a local[32] constant): without
-    # it AQE coalesces the sub-advisory-size text exchange to ONE
-    # partition at small SF and the relocated tokenize+explode runs
-    # serially — the explicit N keeps tokenization at full width, which
-    # is the point of moving it.
-    n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select("doc_id", "text")
-        .repartition(n_part, "doc_id")
-        .select("doc_id", F.posexplode(_words(F.col("text"))).alias("pos", "w"))
-        .withColumn("w1", F.lead("w", 1).over(w))
-        .withColumn("w2", F.lead("w", 2).over(w))
-        .filter(F.col("w2").isNotNull())
-        .select("doc_id", F.concat_ws(" ", "w", "w1", "w2").alias("shingle"))
-    )
+
+def _gram(n: int) -> Column:
+    """The space-joined w1 .. wn words of a :func:`word_ngrams` row."""
+    return F.concat_ws(" ", *[f"w{i}" for i in range(1, n + 1)])
 
 
 def shingle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,7 +238,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_normalized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    canon = F.array_join(F.array_sort(F.array_distinct(_words(F.lower(F.trim(F.col("text")))))), " ")
+    canon = F.array_join(
+        F.array_sort(F.array_distinct(whitespace_tokens(F.lower(F.trim(F.col("text")))))), " "
+    )
     return (
         d.select(F.md5(canon).alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
@@ -423,10 +392,10 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash per doc: per-bit majority vote over token hashes
     (all token occurrences — natural TF weighting)."""
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    toks = d.select("doc_id", F.explode(_words(F.col("text"))).alias("w")).select(
-        "doc_id", md5_int(F.col("w")).alias("h")
+    words = partitioned_docs(d).select(
+        "doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("w")
     )
+    toks = words.select("doc_id", md5_int(F.col("w")).alias("h"))
     votes = [
         F.sum(
             F.when(F.expr(f"(h >> {b}) & 1") == 1, 1).otherwise(-1)
@@ -1080,25 +1049,10 @@ NGRAM_COV_W = 5  # sliding word-5-grams (the exact-substring unit)
     tags=("dedup",),
 )
 def dedup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    w = W.partitionBy("doc_id").orderBy("pos")
-    # r18 (the shingles_of fix): raw text across the window's exchange,
-    # tokenize post-exchange at full width; explicit N so AQE can't
-    # coalesce the small text exchange to one partition. Measured sf5
-    # 15.49 -> 4.97 s; sf0.1 1.18 -> 0.94 s.
-    _n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     grams = (
-        d.select("doc_id", "text")
-        .repartition(_n_part, "doc_id")
-        .select("doc_id", F.posexplode(_words(F.col("text"))).alias("pos", "w"))
-        .withColumn("w1", F.lead("w", 1).over(w))
-        .withColumn("w2", F.lead("w", 2).over(w))
-        .withColumn("w3", F.lead("w", 3).over(w))
-        .withColumn("w4", F.lead("w", 4).over(w))
-        .filter(F.col("w4").isNotNull())
-        .select("doc_id", F.concat_ws(" ", "w", "w1", "w2", "w3", "w4").alias("gram"))
+        word_ngrams(partitioned_docs(d), NGRAM_COV_W)
+        .select("doc_id", _gram(NGRAM_COV_W).alias("gram"))
         # (doc, gram) feeds BOTH the document-frequency aggregation and
         # the score join; the repartition's Exchange is computed once
         # per execution and reused by both branches (the 5.5 s double
@@ -1440,7 +1394,7 @@ def dedup_cluster_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = load_tables(spark, sf_dir, "documents")["documents"]
     canon = F.array_join(
-        F.array_sort(F.array_distinct(_words(F.lower(F.trim(F.col("text")))))), " "
+        F.array_sort(F.array_distinct(whitespace_tokens(F.lower(F.trim(F.col("text")))))), " "
     )
     truth = d.select("doc_id", F.md5(canon).alias("pb"))
     # The contingency table (one row per (pred, truth) cluster pair)
@@ -1810,25 +1764,8 @@ def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    w = W.partitionBy("doc_id").orderBy("pos")
-    # r18 (the shingles_of fix): raw text across the window's exchange,
-    # tokenize post-exchange at full width (sf5 55.4 -> 54.3 s — the
-    # gram self-join dominates here; sf0.1 1.55 -> 1.40 s).
-    _n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    grams = (
-        d.select("doc_id", "text")
-        .repartition(_n_part, "doc_id")
-        .select("doc_id", F.posexplode(_words(F.col("text"))).alias("pos", "wd"))
-        .withColumn("w1", F.lead("wd", 1).over(w))
-        .withColumn("w2", F.lead("wd", 2).over(w))
-        .withColumn("w3", F.lead("wd", 3).over(w))
-        .withColumn("w4", F.lead("wd", 4).over(w))
-        .filter(F.col("w4").isNotNull())
-        .select(
-            "doc_id",
-            "pos",
-            F.concat_ws(" ", "wd", "w1", "w2", "w3", "w4").alias("gram"),
-        )
+    grams = word_ngrams(partitioned_docs(d), SUBSTR_RUN_W).select(
+        "doc_id", "pos", _gram(SUBSTR_RUN_W).alias("gram")
     )
     keyed = (
         grams.groupBy("gram")
@@ -1837,18 +1774,16 @@ def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("gram")
     )
     # The df-gated gram table feeds both sides of the seed self-join;
-    # unpinned, a and b each re-derived grams + keyed (8x documents
-    # scans, r14 scan audit). Pinning gk fixes the plan at TWO corpus
-    # scans — the induce-then-apply floor (keyed needs the df histogram
-    # before gk can filter) — while materializing only the df-in-[2,cap]
-    # grams, never the full gram stream (which is ~5x corpus bytes and
-    # would be the wrong trade at 100 TB). fact_scale (r18): gk is
-    # CORPUS-LINEAR, and the checkpoint's size-blind stats let the
-    # planner BROADCAST it into the seed self-join at every scale — at
-    # sf5 a ~12M-row hash relation in every task's heap (GCLocker
-    # thrash, 45 s sort tasks). The persist's accurate size stats make
-    # AQE keep the broadcast only while gk is genuinely small
-    # (sf5: 54 -> 23 s; the seed join becomes a shuffle join at scale).
+    # unpinned, a and b each re-derive grams + keyed (8x documents
+    # scans). Pinning gk aims at TWO corpus scans — the induce-then-apply
+    # floor (keyed needs the df histogram before gk can filter) — while
+    # materializing only the df-in-[2,cap] grams, never the full gram
+    # stream (~5x corpus bytes). The floor is best-effort: fact_scale is
+    # a lazy MEMORY_AND_DISK persist, so it holds only while the cached
+    # blocks do; an evicted block is recomputed from its lineage.
+    # fact_scale because gk is corpus-linear: the persist's accurate
+    # size stats let AQE broadcast gk into the seed self-join only while
+    # it is small, and shuffle-join it at scale.
     gk = grams.join(keyed, "gram").transform(pin, fact_scale=True)
     a = gk.select(
         F.col("doc_id").alias("da"), F.col("pos").alias("pa"), F.col("gram")

@@ -38,6 +38,7 @@ from http_datafusion_spark.functions.hashing import (
     salted_hash_sql,
 )
 from http_datafusion_spark.functions.pinning import pin
+from http_datafusion_spark.operators.text import whitespace_tokens
 from http_datafusion_spark.plans.registry import REGISTRY, query
 from http_datafusion_spark.plans.tables import load_tables
 
@@ -67,7 +68,7 @@ _WORDS_SQL = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 )
 def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens(F.col("text"))
     base = d.select("doc_id", words.alias("words")).filter(F.size("words") > 0)
     starts = base.select(
         "doc_id",
@@ -688,7 +689,7 @@ def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens(F.col("text"))
     base = d.select("doc_id", words.alias("words")).filter(F.size("words") > 0)
     segs = base.select(
         "doc_id",
@@ -749,7 +750,7 @@ def doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens(F.col("text"))
     t = d.select("source", "doc_id", F.size(words).cast("bigint").alias("n_tokens"))
     w = W.partitionBy("source").orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0)
     bin_id = F.floor((F.sum("n_tokens").over(w) - F.col("n_tokens")) / PACK_BUDGET)
@@ -967,7 +968,7 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from http_datafusion_spark.operators.dedup import shingled_docs
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens(F.col("text"))
     fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
     base = d.select(
         "doc_id",
@@ -1693,7 +1694,7 @@ def corpus_build_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != "")
+    words = whitespace_tokens(F.col("text"))
     fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "))
     base = d.select(
         "doc_id",
@@ -1930,7 +1931,7 @@ def table_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    from http_datafusion_spark.operators.text import token_count, whitespace_tokens
+    from http_datafusion_spark.operators.text import token_count
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
@@ -2020,7 +2021,7 @@ MIX_TOKEN_BUDGET = 20_000  # target training-token budget
 def mixture_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    from http_datafusion_spark.operators.text import token_count, whitespace_tokens
+    from http_datafusion_spark.operators.text import token_count
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     n_toks = token_count(F.col("text"))
@@ -2365,7 +2366,7 @@ REL_MIN_SOURCES = 10
 def release_readiness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     import functools
 
-    from http_datafusion_spark.operators.text import token_count, whitespace_tokens
+    from http_datafusion_spark.operators.text import token_count
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
@@ -2440,11 +2441,7 @@ DECON_SWEEP = (1, 2, 3, 5)  # candidate shared-shingle thresholds
     tags=("pipeline", "dedup", "agg", "bench_extra"),
 )
 def decontaminate_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.operators.dedup import (
-        SHINGLE_WIDTH,
-        _words,
-        shingled_docs,
-    )
+    from http_datafusion_spark.operators.dedup import SHINGLE_WIDTH, shingled_docs
 
     sh = shingled_docs(spark, sf_dir)
     is_bench = F.col("doc_id") % DECON_MOD == 0
@@ -2464,7 +2461,7 @@ def decontaminate_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     # explode, no doc_id-window shuffle.
     ncorpus = (
         load_tables(spark, sf_dir, "documents")["documents"]
-        .filter(~is_bench & (F.size(_words(F.col("text"))) >= SHINGLE_WIDTH))
+        .filter(~is_bench & (F.size(whitespace_tokens(F.col("text"))) >= SHINGLE_WIDTH))
         .agg(F.countDistinct("doc_id").cast("bigint").alias("n"))
     )
     thresholds = spark.createDataFrame([(t,) for t in DECON_SWEEP], "thr bigint")
@@ -2557,8 +2554,6 @@ _LWORDS_SQL = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x
 )
 def rag_chunk_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
-
-    from http_datafusion_spark.operators.text import whitespace_tokens
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     lwords = whitespace_tokens(F.lower(F.col("text")))
@@ -2707,7 +2702,7 @@ def curriculum_stage_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_global_rank,
         ntile_from_rank,
     )
-    from http_datafusion_spark.operators.text import spread_docs, whitespace_tokens
+    from http_datafusion_spark.operators.text import spread_docs
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
     dw = spread_docs(d.select("doc_id", "text")).select(
@@ -2991,7 +2986,6 @@ def rag_rrf_fusion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     from http_datafusion_spark.operators.similarity import _dot, _norm
-    from http_datafusion_spark.operators.text import whitespace_tokens
 
     t = load_tables(spark, sf_dir, "documents", "embeddings")
     d, e = t["documents"], t["embeddings"]
@@ -3171,8 +3165,6 @@ _DSIR_WORDS_SQL = "list_filter(string_split_regex(trim(lower(text)), '\\s+'), w 
     tags=("pipeline", "text"),
 )
 def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from http_datafusion_spark.operators.text import whitespace_tokens
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
     words = whitespace_tokens(F.lower(F.col("text")))
     n = F.size("words")
@@ -3658,7 +3650,6 @@ def rag_rerank_cross_encoder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     from http_datafusion_spark.operators.similarity import _dot, _norm
-    from http_datafusion_spark.operators.text import whitespace_tokens
 
     t = load_tables(spark, sf_dir, "documents", "embeddings")
     d, e = t["documents"], t["embeddings"]

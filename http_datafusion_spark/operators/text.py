@@ -47,18 +47,31 @@ def bpe_ish_token_estimate(col: Column) -> Column:
 
 def partitioned_docs(df: DataFrame, *cols: str) -> DataFrame:
     """(doc_id[, cols...], text) hash-partitioned by doc_id at the
-    session's shuffle width — for the posexplode + window(doc_id) token
-    shapes (bigram/shingle streams). The window forces this exchange
-    anyway; taking it BEFORE the explode makes it carry raw text
-    instead of the exploded token stream (strictly fewer bytes at every
-    scale) and runs tokenize at full width instead of inside the scan
-    task (the r18 shingles_of fix: one 6.6 s serial map task at sf5
-    became 32-way). Explicit N because AQE would coalesce the small
-    text exchange back to one partition at bench SFs. Sibling token
-    streams in the same query should derive from THIS frame so the one
-    exchange feeds them all."""
+    session's shuffle width, for token streams that a doc_id window or
+    aggregation partitions anyway (:func:`word_ngrams`). Taking that
+    exchange before the explode makes text cross it raw, so tokenizing
+    runs after it at full width instead of inside the scan task. The
+    explicit N stops AQE from coalescing the small text exchange back
+    to one partition. Derive a query's sibling token streams from this
+    one frame so the one exchange feeds them all."""
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.select("doc_id", *cols, "text").repartition(n_part, "doc_id")
+
+
+def word_ngrams(dp: DataFrame, n: int) -> DataFrame:
+    """(doc_id[, cols...], pos, w1 .. wn): one row per run of ``n``
+    consecutive :func:`whitespace_tokens` of a :func:`partitioned_docs`
+    frame, starting at 0-based token ``pos``; a document with fewer
+    than ``n`` tokens yields no row. posexplode plus ``lead`` over a
+    doc_id window runs as codegen, where a higher-order ``transform``
+    over the token array would be interpreted."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("doc_id").orderBy("pos")
+    cols = [c for c in dp.columns if c != "text"]
+    toks = dp.select(*cols, F.posexplode(whitespace_tokens(F.col("text"))).alias("pos", "w1"))
+    leads = [F.lead("w1", k).over(w).alias(f"w{k + 1}") for k in range(1, n)]
+    return toks.select("*", *leads).filter(F.col(f"w{n}").isNotNull())
 
 
 def spread_docs(df: DataFrame, key: str = "doc_id") -> DataFrame:
@@ -285,22 +298,12 @@ def text_per_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text",),
 )
 def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """posexplode + window lead (codegen) rather than a HOF transform,
-    same as the MinHash shingle stage; count + top-k fuse into partial
-    aggregation and TakeOrderedAndProject — no global sort."""
-    from pyspark.sql import Window as W
-
+    """Word bigrams from :func:`word_ngrams`; count + top-k fuse into
+    partial aggregation and TakeOrderedAndProject — no global sort."""
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    w = W.partitionBy("doc_id").orderBy("pos")
-    words = F.filter(F.split(F.trim("text"), r"\s+"), lambda x: x != "")
-    # r18 partitioned_docs: text crosses the window's exchange raw;
-    # tokenize runs post-exchange at full width (sf5 6.67 -> 1.27 s).
     return (
-        partitioned_docs(d)
-        .select("doc_id", F.posexplode(words).alias("pos", "w"))
-        .withColumn("w1", F.lead("w", 1).over(w))
-        .filter(F.col("w1").isNotNull())
-        .select(F.concat_ws(" ", F.lower("w"), F.lower("w1")).alias("bigram"))
+        word_ngrams(partitioned_docs(d), 2)
+        .select(F.concat_ws(" ", F.lower("w1"), F.lower("w2")).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc(), F.col("bigram"))
@@ -583,24 +586,11 @@ _WSPLIT_SQL = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')
     tags=("text", "pipeline", "bench"),
 )
 def text_tfidf_topterm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # Explicit Exchange (not .cache()) so the exploded token stream is
-    # computed once per execution via exchange reuse — zero pinned
-    # state, honest re-execution on every run.
-    # r18: the repartition moved BEFORE the explode (the shingles_of
-    # pattern): the exchange needed hashpartitioning(doc_id) either
-    # way, but it now carries raw text instead of the exploded token
-    # stream (fewer bytes at every scale) and tokenize+explode runs at
-    # full shuffle width instead of inside the scan task; explicit N
-    # stops AQE coalescing the small text exchange back to one
-    # partition. Measured sf5 8.76 -> 2.58 s, sf0.1 0.94 -> 0.72 s.
-    _n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    dw = (
-        d.select("doc_id", "text")
-        .repartition(_n_part, "doc_id")
-        .select("doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("word"))
+    # The doc_id exchange (not .cache()) is computed once per execution
+    # and reused by both branches — zero pinned state.
+    dw = partitioned_docs(d).select(
+        "doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("word")
     )
     tf = dw.groupBy("doc_id", "word").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     dfreq = dw.groupBy("word").agg(F.count_distinct("doc_id").cast("bigint").alias("df"))
@@ -2604,8 +2594,6 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    # r18 partitioned_docs: text crosses the segment window's exchange
-    # raw; tokenize runs post-exchange at full width (sf5 33 -> 13 s).
     toks = partitioned_docs(d).select(
         "doc_id",
         F.posexplode(whitespace_tokens(F.lower(F.col("text")))).alias("pos", "word"),
@@ -3013,11 +3001,10 @@ def text_mattr_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    lwords = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda w: w != ""
-    )
     toks = d.select(
-        "doc_id", "source", F.posexplode(lwords).alias("pos0", "word")
+        "doc_id",
+        "source",
+        F.posexplode(whitespace_tokens(F.lower(F.col("text")))).alias("pos0", "word"),
     ).select("doc_id", "source", (F.col("pos0") + 1).alias("pos"), "word")
     n = toks.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     lagged = (
@@ -3121,12 +3108,7 @@ ARI_HARD_GRADE = 10.0  # 'hard' = above 10th-grade level
 def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, "documents")["documents"]
     words = F.greatest(
-        F.size(
-            F.filter(
-                F.split(F.trim(F.col("text")), r"\s+"),
-                lambda x: x != F.lit(""),
-            )
-        ).cast("bigint"),
+        F.size(whitespace_tokens(F.col("text"))).cast("bigint"),
         F.lit(1),
     )
     letters = F.length(

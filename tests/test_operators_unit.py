@@ -5,6 +5,7 @@ reach (NULL payload fields, unconverged components, empty buckets).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -470,6 +471,55 @@ def test_token_count_equals_materialized_split(spark, sf_dir):
             (F.size(whitespace_tokens(F.col("text"))) != token_count(F.col("text"))).alias("x")
         ).filter("x").count()
         assert bad == 0
+
+
+# Edge texts for the tokenizer and the n-gram stream: null, empty,
+# whitespace-only, tab/newline runs, fewer than / exactly n words, and
+# repeated words.
+_EDGE_TEXTS = (
+    None,
+    "",
+    "   ",
+    "\t\n \t\n",
+    " a\t\tb\n\n c ",
+    "x y",
+    "one two three",
+    "one two three four five",
+    "dup dup dup dup dup dup",
+    "\tp q\r\nr  s\n\tt u v ",
+)
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_word_ngrams_match_str_split_windows(spark, n):
+    """whitespace_tokens equals str.split() (null stays null) and
+    word_ngrams(partitioned_docs(df, "source"), n) equals every window of
+    n consecutive str.split() words, carried column and 0-based start
+    position included; a text with fewer than n words yields no row."""
+    from http_datafusion_spark.operators.text import (
+        partitioned_docs,
+        whitespace_tokens,
+        word_ngrams,
+    )
+
+    rows = [(i, f"s{i % 3}", t) for i, t in enumerate(_EDGE_TEXTS)]
+    df = spark.createDataFrame(rows, "doc_id bigint, source string, text string")
+
+    toks = df.select("doc_id", whitespace_tokens(F.col("text")).alias("t")).collect()
+    assert {r.doc_id: r.t for r in toks} == {
+        i: (None if t is None else t.split()) for i, t in enumerate(_EDGE_TEXTS)
+    }
+
+    grams = word_ngrams(partitioned_docs(df, "source"), n)
+    words = [f"w{k}" for k in range(1, n + 1)]
+    assert grams.columns == ["doc_id", "source", "pos", *words]
+    want = sorted(
+        (i, src, p, *t.split()[p : p + n])
+        for i, src, t in rows
+        if t is not None
+        for p in range(len(t.split()) - n + 1)
+    )
+    assert sorted(tuple(r) for r in grams.collect()) == want
 
 
 # ---------------------------------------- r12 stats-family invariants

@@ -1511,3 +1511,87 @@ def test_spread_docs_never_narrows(spark, sf_dir, monkeypatch):
     with _spread_widths(spark, monkeypatch, parallelism=8, shuffle_partitions=2):
         mid = d.repartition(4, "doc_id")
         assert spread_docs(mid).rdd.getNumPartitions() >= 4
+
+
+# Queries whose token stream is built after a partitioned_docs
+# exchange: the nine word_ngrams streams (dedup_minhash_signature
+# stands for shingles_of) and two plain token streams.
+_POST_EXCHANGE_TOKENIZERS = (
+    "dedup_minhash_signature",
+    "dedup_ngram_coverage",
+    "dedup_substring_runs",
+    "text_top_bigrams",
+    "ngram_pmi_bigrams",
+    "text_bigram_logprob",
+    "text_heldout_perplexity",
+    "text_kneser_ney_bigram",
+    "feature_hash_collision_audit",
+    "text_tfidf_topterm",
+    "dedup_simhash_pairs",
+)
+
+
+def _physical_nodes(node):
+    """Every node of a physical plan: AQE plans are walked through their
+    initial (pre-execution) plan, cached relations through the plan that
+    fills them, reused exchanges through the exchange they reuse."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _physical_nodes(node.initialPlan())
+        return
+    yield node
+    if name.startswith("InMemoryTableScan"):
+        yield from _physical_nodes(node.relation().cachedPlan())
+    if name == "ReusedExchange":
+        yield from _physical_nodes(node.child())
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _physical_nodes(kids.apply(i))
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _is_raw_text_exchange(node, n_part: int) -> bool:
+    if node.nodeName() != "Exchange":
+        return False
+    part = node.outputPartitioning()
+    return (
+        part.getClass().getSimpleName() == "HashPartitioning"
+        and [e.name() for e in _seq(part.expressions())] == ["doc_id"]
+        and part.numPartitions() == n_part
+        and "text" in [a.name() for a in _seq(node.output())]
+    )
+
+
+@pytest.mark.parametrize("name", _POST_EXCHANGE_TOKENIZERS)
+def test_text_is_tokenized_after_the_doc_id_exchange(spark, sf_dir, name):
+    """Every Generate that explodes the ``text`` column sits above a
+    hashpartitioning(doc_id, N) exchange that carries the raw text, N
+    being the shuffle-partition conf: the tokenize pass runs after the
+    exchange at full width, not inside the scan task. Pins run in
+    ``persist`` mode so the plans they cache stay walkable."""
+    from http_datafusion_spark.functions.pinning import PIN_MODE_KEY, pin_scope
+
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    spark.conf.set(PIN_MODE_KEY, "persist")
+    try:
+        with pin_scope():
+            df = QS[name].spark(spark, sf_dir)
+            nodes = list(_physical_nodes(df._jdf.queryExecution().executedPlan()))
+            tokenizers = [
+                g
+                for g in nodes
+                if g.nodeName() == "Generate"
+                and "text" in [a.name() for a in _seq(g.generator().references().toSeq())]
+            ]
+            assert tokenizers, f"{name}: no Generate over text"
+            for g in tokenizers:
+                below = list(_physical_nodes(g))[1:]
+                assert any(_is_raw_text_exchange(x, n_part) for x in below), (
+                    f"{name}: a text Generate has no hashpartitioning(doc_id, {n_part}) "
+                    f"exchange of raw text below it"
+                )
+    finally:
+        spark.conf.unset(PIN_MODE_KEY)
